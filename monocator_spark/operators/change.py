@@ -76,7 +76,7 @@ def with_screenshot(
     is the first one's phash), not a cross-product on image_id.
 
     The history prune and prior join build from wave-bounded sides —
-    broadcast below cfg.wave_broadcast_max, shuffle join above it (a
+    broadcast up to hints.WAVE_BROADCAST_MAX_ROWS, shuffle join above it (a
     10^8-row wave cannot be a driver broadcast).
     """
     from monocator_spark.operators.hints import wave_side

@@ -26,6 +26,8 @@ from monocator_spark import spec
 from monocator_spark.functions.urlnorm import canonicalize_udf
 
 FRONTIER_COLS = ["url_norm", "url_hash", "host", "priority", "depth", "retries"]
+# frontier rows carry their (static) per-host quota from enqueue-time gating
+FRONTIER_COLS_Q = [*FRONTIER_COLS, "quota"]
 
 
 def prepare_candidates(raw: DataFrame) -> DataFrame:

@@ -30,18 +30,6 @@ from monocator_spark.functions.imaging import decode, phash64, pixels_for, psnr_
 from monocator_spark.sim.simulator import INVALID, MISSING, OK, OVERSIZE
 
 
-def _noop_status_col(cfg: spec.CrawlConfig) -> F.Column:
-    """cfg.noop_validate's pure-Catalyst status: the subset of the validator
-    decidable without decoding (null/oversize), OK otherwise. Identical to
-    the real validator on all-well-formed worlds (see spec.CrawlConfig)."""
-    return (
-        F.when(F.col("bytes").isNull(), F.lit(MISSING))
-        .when(F.length("bytes") > cfg.max_body_bytes, F.lit(OVERSIZE))
-        .otherwise(F.lit(OK))
-        .cast("int")
-    )
-
-
 def make_validate_udf(cfg: spec.CrawlConfig):
     max_body, psnr_min = cfg.max_body_bytes, cfg.psnr_min_db
 
@@ -108,10 +96,11 @@ def fetch_wave(
     misses are MISSING by construction and never cross the Arrow boundary.
 
     Both wave-bounded join sides (the wave itself and the hit-key set) are
-    broadcast only below cfg.wave_broadcast_max; above it the joins fall
-    back to shuffle joins (the bucketed layout, ``fetch_wave_bucketed``, is
-    the intended at-scale path — this fallback keeps the generic path
-    correct rather than OOMing the driver on a 10^8-row wave).
+    broadcast only up to hints.WAVE_BROADCAST_MAX_ROWS wave rows; above it
+    the joins fall back to shuffle joins (the bucketed layout,
+    ``fetch_wave_bucketed``, is the intended at-scale path — this fallback
+    keeps the generic path correct rather than OOMing the driver on a
+    10^8-row wave).
     """
     from monocator_spark.operators.hints import wave_side
 
@@ -130,14 +119,11 @@ def fetch_wave(
         F.lit(None).cast("long").alias("phash"),
         *[c for c in keyed.columns if c != "image_id"],
     )
-    if cfg.noop_validate:
-        validated_hit = hit.withColumn("status", _noop_status_col(cfg))
-    else:
-        validate_udf = make_validate_udf(cfg)
-        validated_hit = hit.withColumn(
-            "status",
-            validate_udf("image_id", "bytes", "w", "h", "caption", "phash"),
-        )
+    validate_udf = make_validate_udf(cfg)
+    validated_hit = hit.withColumn(
+        "status",
+        validate_udf("image_id", "bytes", "w", "h", "caption", "phash"),
+    )
     return validated_hit.unionByName(
         miss.withColumn("status", F.lit(MISSING).cast("int"))
     )
@@ -157,8 +143,6 @@ def fetch_wave_bucketed(
     """
     keyed = wave.withColumn("image_id", F.substring_index("url_norm", "/", -1))
     joined = keyed.join(corpus_tbl, "image_id", "left")
-    if cfg.noop_validate:
-        return joined.withColumn("status", _noop_status_col(cfg))
     validate_udf = make_validate_udf(cfg)
     return joined.withColumn(
         "status",

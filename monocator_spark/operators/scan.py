@@ -184,7 +184,7 @@ def scan_wave(
     order-free, so two co-hosted hosts discovered in the same wave both
     count as misses but still share the single fresh scan.
 
-    The wave-IP probe side broadcasts only below cfg.wave_broadcast_max
+    The wave-IP probe side broadcasts only up to WAVE_BROADCAST_MAX_ROWS
     (operators/hints.wave_side): a full-scale wave's distinct-IP set can be
     10^7–10^8 rows, which must take the shuffle join against the cache.
     """

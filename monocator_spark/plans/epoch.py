@@ -29,6 +29,7 @@ from pyspark.sql.types import (
 
 from monocator_spark import spec
 from monocator_spark.operators import dedup, enqueue, fetch, outlinks, politeness
+from monocator_spark.operators.enqueue import FRONTIER_COLS_Q
 from monocator_spark.sim.simulator import MISSING, OK
 from monocator_spark.sources.store import SnapshotStore
 
@@ -43,9 +44,6 @@ FRONTIER_SCHEMA = StructType(
         StructField("quota", IntegerType()),
     ]
 )
-
-# frontier rows carry their (static) per-host quota from enqueue-time gating
-FRONTIER_COLS_Q = [*enqueue.FRONTIER_COLS, "quota"]
 
 
 @dataclass
@@ -87,16 +85,14 @@ class CrawlEngine:
         self.payload_write_mode = self._resolve_payload_write()
 
     def _resolve_payload_write(self) -> str:
-        """Resolve cfg.payload_write ("auto" → "cache"/"rejoin") once.
+        """"cache" iff one wave's payload fits cfg.payload_cache_max_bytes,
+        else "rejoin" (see _phase1 / _payload_rows for the two regimes).
 
-        The auto estimate reads parquet FOOTERS only (no data scan): the
+        The estimate reads parquet FOOTERS only (no data scan): the
         corpus's on-disk bytes/row — payload-dominated by construction —
         times the wave size approximates one wave's cached payload
         footprint. Driver-side, a handful of file stats, run once per
         engine lifetime."""
-        mode = self.cfg.payload_write
-        if mode != "auto":
-            return mode
         import glob
         import os
 
@@ -134,18 +130,6 @@ class CrawlEngine:
         state; a kill before the tail commits leaves no manifest → clean
         re-bootstrap on resume.
         """
-        import os
-
-        _debug = bool(os.environ.get("MONO_EPOCH_TIMING"))
-        _t0 = time.monotonic()
-
-        def _bmark(label: str) -> None:
-            if _debug:
-                print(
-                    f"[timing] boot.{label} @ {time.monotonic() - _t0:.2f}s",
-                    flush=True,
-                )
-
         seeds = self.spark.read.parquet(f"{self.world_dir}/seeds").withColumn(
             "depth", F.lit(0)
         )
@@ -153,38 +137,12 @@ class CrawlEngine:
         # materialize the cache once so the concurrent writes below all
         # read it instead of racing to build it multiple times
         cands.count()
-        _bmark("cands_materialized")
         admitted, denied = politeness.gate(cands, self.host_state, self.cfg)
         seen = cands.select("url_hash", "url_norm")
         bloom = dedup.merge_filter(
             None, dedup.build_filter(cands.select("url_hash"), self.cfg), self.cfg
         ).cache()  # small (n_shards rows); read by epoch 0 AND the tail write
         frontier0 = admitted.select(*FRONTIER_COLS_Q)
-
-        if os.environ.get("MONO_BOOT_HANDOFF", "1") == "0":
-            # A/B escape hatch: stage the state synchronously (the
-            # pre-handoff behavior) instead of handing epoch 0 the
-            # in-memory plans
-            writes = [
-                lambda: self.store.stage_overwrite("frontier", frontier0, 0),
-                lambda: self.store.stage_append("seen", seen, 0),
-                lambda: self.store.stage_overwrite("bloom", bloom, 0),
-            ]
-            with ThreadPoolExecutor(max_workers=len(writes)) as pool:
-                for fut in [pool.submit(w) for w in writes]:
-                    fut.result()
-            bloom.unpersist()
-            _bmark("state_staged_sync")
-
-            def tail_sync() -> dict:
-                self.store.stage_append(
-                    "denied", denied.withColumn("epoch", F.lit(0)), 0
-                )
-                self.store.commit(0, {"crawl_epoch": -1})
-                cands.unpersist()
-                return {"idle": True}
-
-            return tail_sync
 
         # epoch 0 reads this state straight from the in-memory plans over
         # the cands cache — no parquet round trip on the critical path. The
@@ -194,7 +152,6 @@ class CrawlEngine:
         # commits leaves no manifest → clean re-bootstrap on resume.
         self._boot_state = {"frontier": frontier0, "seen": seen, "bloom": bloom}
         self._boot_persist = [cands, bloom]
-        _bmark("state_ready_in_memory")
 
         def tail() -> dict:
             writes = [
@@ -209,7 +166,6 @@ class CrawlEngine:
                 for fut in [pool.submit(w) for w in writes]:
                     fut.result()
             self.store.commit(0, {"crawl_epoch": -1})
-            _bmark("tail_committed")
             return {"idle": True}  # bookkeeping only — not a crawl epoch
 
         return tail
@@ -238,17 +194,14 @@ class CrawlEngine:
     # commits.
 
     def _phase1(self, epoch: int, state_ready) -> dict | None:
-        import os
-
+        # per-phase seconds, reported in RunStats.per_epoch[].timing
         timing: dict[str, float] = {}
-        _debug = bool(os.environ.get("MONO_EPOCH_TIMING"))
         _last = [time.monotonic()]
 
         def _mark(label: str) -> None:
-            if _debug:
-                now = time.monotonic()
-                timing[label] = round(now - _last[0], 2)
-                _last[0] = now
+            now = time.monotonic()
+            timing[label] = round(now - _last[0], 2)
+            _last[0] = now
 
         cfg = self.cfg
         persisted: list = []  # this epoch's caches; released by its _phase2
@@ -486,7 +439,7 @@ class CrawlEngine:
             )
 
         # next frontier: pending minus this wave, plus retries, plus admitted.
-        # The wave-key side broadcasts only below cfg.wave_broadcast_max —
+        # The wave-key side broadcasts only up to WAVE_BROADCAST_MAX_ROWS —
         # a 10^8-row wave at full scale takes the shuffle anti-join instead
         # (operators/hints.wave_side, same switch as the fetch/change joins).
         from monocator_spark.operators.hints import wave_side
@@ -539,7 +492,7 @@ class CrawlEngine:
             "smtp_rows": smtp_rows, "new_smtp_rows": new_smtp_rows,
             "host_next": host_next_new,
             "status_obs": status_obs, "frontier_obs": frontier_obs,
-            "persisted": persisted, "debug": _debug,
+            "persisted": persisted,
         }
 
     def _payload_rows(self, meta: DataFrame) -> DataFrame:
@@ -552,7 +505,7 @@ class CrawlEngine:
         rejoin mode (meta is narrow): OK rows re-join the corpus for their
         payload (an OK row's stored bytes ARE its corpus bytes — the
         validator only derives status, never rewrites the body). The
-        wave-bounded narrow side broadcasts below cfg.wave_broadcast_max
+        wave-bounded narrow side broadcasts up to WAVE_BROADCAST_MAX_ROWS
         (shuffle join above — and against the bucketed corpus layout only
         the narrow side ever shuffles); the corpus scan is pruned to
         (image_id, bytes) but is still one extra corpus pass per epoch —
@@ -633,8 +586,7 @@ class CrawlEngine:
 
         if state_ready is not None:
             state_ready.set()  # next epoch may now preview the staged state
-        if ctx["debug"]:
-            ctx["timing"]["state_flush"] = round(time.monotonic() - t_flush, 2)
+        ctx["timing"]["state_flush"] = round(time.monotonic() - t_flush, 2)
 
         flushes: list = [
             lambda: st.stage_append(
@@ -718,9 +670,8 @@ class CrawlEngine:
         # consumed manifest numbers; crawl_epoch in meta is what resume reads
         last = st.last_epoch()
         st.commit((-1 if last is None else last) + 1, {"crawl_epoch": epoch})
-        if ctx["debug"]:
-            ctx["timing"]["flush_commit"] = round(time.monotonic() - t_flush, 2)
-            m["timing"] = ctx["timing"]
+        ctx["timing"]["flush_commit"] = round(time.monotonic() - t_flush, 2)
+        m["timing"] = ctx["timing"]
         for df in ctx["persisted"]:
             df.unpersist()
         return m
@@ -811,26 +762,15 @@ class CrawlEngine:
         background thread) overlaps epoch k+1's compute. Commits still land
         strictly in epoch order, so a kill at any moment resumes exactly.
         """
-        import os
         import threading
 
         t0 = time.monotonic()
-        _debug = bool(os.environ.get("MONO_EPOCH_TIMING"))
-
-        def _land(label: str) -> None:
-            if _debug:
-                print(
-                    f"[timing] {label} @ {time.monotonic() - t0:.2f}s",
-                    flush=True,
-                )
-
         boot_tail = None
         if self.store.last_epoch() is None:
-            # stages the epoch-0 state tables synchronously (readable via
-            # preview) and defers the denied write + commit to the flusher,
-            # overlapping them with epoch 0's compute
+            # hands epoch 0 its state as in-memory plans and defers every
+            # durable write + the epoch-0 commit to the flusher, overlapping
+            # them with epoch 0's compute
             boot_tail = self.bootstrap()
-            _land("bootstrap_ready")
             start = 0
         else:
             start = self.store.meta()["crawl_epoch"] + 1
@@ -876,7 +816,6 @@ class CrawlEngine:
                 if abort.is_set():
                     break
                 ctx = self._phase1(epoch, prev_ev)
-                _land(f"phase1_done e{epoch}")
                 if ctx is None:
                     break
                 ev = threading.Event()
@@ -889,7 +828,6 @@ class CrawlEngine:
             phase1_exc = e
         finally:
             flusher.shutdown(wait=True)
-            _land("drain_done")
         flush_exc: BaseException | None = None
         for fut in futures:
             try:

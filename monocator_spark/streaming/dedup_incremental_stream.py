@@ -60,7 +60,13 @@ _INDEX_SCHEMA = "band bigint, h0 bigint, h1 bigint, rep_id bigint"
 
 
 class StreamingCorpusDedup:
-    """Continuous corpus dedup: feed dir → verdicts dir + growing index."""
+    """Continuous corpus dedup: feed dir → verdicts dir + growing index.
+
+    ``load_index`` lists the ``index_dir/batch_id=N`` partitions with a
+    driver-side ``glob``, so ``index_dir`` must be on the driver's local
+    filesystem (not HDFS/S3), unlike the feed, verdict and checkpoint
+    paths, which go through Spark readers and writers.
+    """
 
     def __init__(
         self,

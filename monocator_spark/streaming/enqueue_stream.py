@@ -45,6 +45,7 @@ from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
 from monocator_spark import spec
 from monocator_spark.operators import dedup, enqueue, politeness
+from monocator_spark.operators.enqueue import FRONTIER_COLS_Q
 
 SEED_SCHEMA = StructType(
     [
@@ -53,16 +54,12 @@ SEED_SCHEMA = StructType(
     ]
 )
 
-FRONTIER_COLS_Q = [*enqueue.FRONTIER_COLS, "quota"]
-
 
 class StreamingEnqueue:
     """Continuous seed-feed ingestion into a SnapshotStore's frontier.
 
     ``host_state`` (host, robots_rules, budget_per_epoch, blacklisted) makes
-    the stream apply the same enqueue-time politeness gate as the engine;
-    ``None`` admits every new URL at ``cfg.per_host_quota`` (a feed from an
-    already-gated producer).
+    the stream apply the same enqueue-time politeness gate as the engine.
     """
 
     def __init__(
@@ -72,7 +69,7 @@ class StreamingEnqueue:
         store,
         seeds_dir: str,
         checkpoint_dir: str,
-        host_state: DataFrame | None = None,
+        host_state: DataFrame,
     ):
         self.spark = spark
         self.cfg = cfg
@@ -119,13 +116,7 @@ class StreamingEnqueue:
             bloom = self.store.preview(spark, "bloom")
             new = dedup.filter_new(cands, seen, bloom, self.cfg).cache()
             persisted.append(new)
-            if self.host_state is not None:
-                admitted, denied = politeness.gate(new, self.host_state, self.cfg)
-            else:
-                admitted = new.withColumn(
-                    "quota", F.lit(self.cfg.per_host_quota).cast("int")
-                )
-                denied = None
+            admitted, denied = politeness.gate(new, self.host_state, self.cfg)
             last = self.store.last_epoch()
             epoch = 0 if last is None else last + 1
             # carry the crawl's logical epoch forward: CrawlEngine.run
@@ -147,10 +138,9 @@ class StreamingEnqueue:
             self.store.stage_overwrite(
                 "bloom", dedup.merge_filter(bloom, delta, self.cfg), epoch
             )
-            if denied is not None:
-                self.store.stage_append(
-                    "denied", denied.withColumn("epoch", F.lit(epoch)), epoch
-                )
+            self.store.stage_append(
+                "denied", denied.withColumn("epoch", F.lit(epoch)), epoch
+            )
             self.store.commit(
                 epoch,
                 meta={

@@ -34,7 +34,6 @@ def run_leg(codec: str, cores: int, args, tag: str) -> dict:
         "spark.sql.adaptive.enabled=false"
         f";spark.io.compression.codec={codec}"
     )
-    env["MONO_EPOCH_TIMING"] = "1"
     cmd = [
         "taskset", "-c", f"0-{cores - 1}",
         sys.executable, str(REPO / "scripts" / "bench_crawl.py"),

@@ -46,11 +46,6 @@ def main() -> None:
         " either way the crawl output is byte-identical — the checksums"
         " prove it at world scale",
     )
-    ap.add_argument(
-        "--wave-broadcast-max", type=int, default=None,
-        help="override cfg.wave_broadcast_max (0 forces the shuffle"
-        " anti-join path for the wave-bounded joins — measurement A/B)",
-    )
     ap.add_argument("--wave-size", type=int, default=150_000)
     ap.add_argument("--epochs", type=int, default=3)
     ap.add_argument("--per-host-quota", type=int, default=8)
@@ -73,12 +68,6 @@ def main() -> None:
     ap.add_argument(
         "--change-detection", action="store_true",
         help="enable cross-epoch lag(phash) change detection",
-    )
-    ap.add_argument(
-        "--noop-validate", action="store_true",
-        help="pure-Catalyst status instead of the decode UDF (measurement"
-        " A/B: separates engine CPU from byte movement; statuses and"
-        " checksums are identical on the all-well-formed bench worlds)",
     )
     ap.add_argument(
         "--time-politeness", action="store_true",
@@ -129,12 +118,7 @@ def main() -> None:
         tls_scan=args.tls,
         change_detection=args.change_detection,
         time_politeness=args.time_politeness,
-        noop_validate=args.noop_validate,
     )
-    if args.wave_broadcast_max is not None:
-        import dataclasses
-
-        cfg = dataclasses.replace(cfg, wave_broadcast_max=args.wave_broadcast_max)
     engine = CrawlEngine(spark, SnapshotStore(store_dir), args.world, cfg)
 
     if args.warmup:

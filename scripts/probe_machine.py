@@ -65,7 +65,10 @@ def disk_work(args):
     ceiling next to vCPU and DRAM — and unlike them it also swings with
     *other tenants'* IO, which is the leading suspect for the observed
     1.5-2x run-to-run drift (shrinking shuffle bytes via zstd bought ~2x at
-    16 cores precisely in contended windows)."""
+    16 cores precisely in contended windows).
+
+    Returns (MB moved, seconds of the write/read loop alone — the chunk
+    generation before it is not timed)."""
     dur, idx = args
     import os
     import tempfile
@@ -89,7 +92,7 @@ def disk_work(args):
             while f.read(1 << 22):
                 pass
             mb += 64  # 32 written+fsynced + 32 read (cache-evicted)
-    return mb
+    return mb, time.monotonic() - t0
 
 
 def run(kind, fn, levels, dur):
@@ -101,7 +104,7 @@ def run(kind, fn, levels, dur):
                 [(dur, i) for i in range(procs)] if kind == "disk" else [(dur,)] * procs,
             )
             wall = time.monotonic() - t0
-        total = sum(res)
+        total = sum(r[0] for r in res) if kind == "disk" else sum(res)
         print(
             json.dumps(
                 {

@@ -109,13 +109,12 @@ def _disk_probe(dur: float = 8.0) -> float:
     immediately before a pair — the round-5 pre-registered window-quality
     gate (BENCH/PREREG_r05_window_gate.md): pairs taken in a contended
     window are filed but excluded from the gated headline median."""
-    import time
-
     from scripts.probe_machine import disk_work
 
-    t0 = time.monotonic()
-    mb = disk_work((dur, 0))
-    return round(mb / (time.monotonic() - t0), 1)
+    # the rate uses disk_work's own timer over its write/read loop, so the
+    # 32 MB random-chunk generation before the loop is not counted
+    mb, elapsed = disk_work((dur, 0))
+    return round(mb / elapsed, 1)
 
 
 def run_level(args: argparse.Namespace, cores: int) -> dict:
@@ -137,8 +136,6 @@ def run_level(args: argparse.Namespace, cores: int) -> dict:
         "--per-host-quota", str(args.per_host_quota), "--salt", str(args.salt),
         "--warmup", "--out", str(out),
     ]
-    if args.noop_validate:
-        cmd.append("--noop-validate")
     import os
 
     env = dict(os.environ)
@@ -173,7 +170,6 @@ def run_level(args: argparse.Namespace, cores: int) -> dict:
     else:
         env.setdefault("SPARK_DRIVER_MEM", f"{args.mem_per_core * cores}g")
         env.setdefault("MONO_SPARK_CONF", "spark.sql.adaptive.enabled=false")
-    env.setdefault("MONO_EPOCH_TIMING", "1")
     print(f"--- running cores={cores}: {' '.join(cmd)}", flush=True)
     subprocess.run(cmd, check=True, env=env)
     with open(out) as f:
@@ -204,8 +200,6 @@ def main() -> None:
     ap.add_argument("--mem-per-core", type=int, default=6,
                     help="JVM heap GB per core (constant across levels, like "
                          "a real cluster's per-executor memory)")
-    ap.add_argument("--noop-validate", action="store_true",
-                    help="measurement A/B: pure-Catalyst status, no decode UDF")
     ap.add_argument("--local-cluster", action="store_true",
                     help="run each level on local-cluster[N,1,mem] (separate "
                          "executor JVMs + real shuffle fetch) instead of local[N]")
@@ -242,6 +236,7 @@ def main() -> None:
         for p in probes
     ]
     gated_effs = [e for e, q in zip(pair_effs, qualifies) if q]
+    eff_gated = _median(gated_effs) if gated_effs else None
     small, large = _pick_best(small_reps), _pick_best(large_reps)
 
     det_ok = (
@@ -263,15 +258,20 @@ def main() -> None:
         "disk_gate_mb_s": args.disk_gate,
         "pair_probe_mb_s": probes,
         "pair_qualifies": qualifies,
-        "scaling_efficiency_gated": (
-            _median(gated_effs) if gated_effs else None
-        ),
+        "scaling_efficiency_gated": eff_gated,
         "window_blocked": bool(args.disk_gate is not None and not gated_effs),
         "efficiency_cross_rep_best": round(
             large["urls_per_sec"] / (ratio * small["urls_per_sec"]), 3
         ),
         "target": 0.8,
         "pass": bool(det_ok and eff >= 0.8),
+        # the pre-registered headline under --disk-gate is the GATED median
+        # (BENCH/PREREG_r05_window_gate.md); None when no gate was set
+        "pass_gated": (
+            bool(det_ok and eff_gated is not None and eff_gated >= 0.8)
+            if args.disk_gate is not None
+            else None
+        ),
         "small": small,
         "large": large,
     }
@@ -282,7 +282,7 @@ def main() -> None:
     print(json.dumps({k: summary[k] for k in (
         "deterministic_across_levels", "thr_small", "thr_large",
         "scaling_efficiency", "pair_efficiencies",
-        "scaling_efficiency_gated", "pair_probe_mb_s", "pass")}))
+        "scaling_efficiency_gated", "pair_probe_mb_s", "pass", "pass_gated")}))
 
 
 if __name__ == "__main__":

@@ -137,3 +137,15 @@ def test_lineage_and_metrics_written(engine_run):
     assert all(
         m.frontier_hosts_approx <= max(m.frontier_size, 1) * 1.05 for m in mrows
     )
+
+
+def test_per_epoch_timing_recorded(spark, tmp_root, world, monkeypatch):
+    """Every epoch reports its phase breakdown, with no opt-in switch."""
+    monkeypatch.delenv("MONO_EPOCH_TIMING", raising=False)
+    eng = CrawlEngine(spark, SnapshotStore(f"{tmp_root}/state-timing"), world, CFG)
+    stats = eng.run(max_epochs=2)
+    assert len(stats.per_epoch) == 2
+    for m in stats.per_epoch:
+        timing = m["timing"]
+        for phase in ("fetch_validate", "compute", "state_flush", "flush_commit"):
+            assert timing[phase] >= 0.0

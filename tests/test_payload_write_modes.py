@@ -8,8 +8,9 @@ payload cache tier, right at 100 TB payload scale). This pins that the
 switch is EXECUTION-ONLY: the same world crawled in both modes — change
 detection on, so the narrow ``phash_hist`` state path is exercised too —
 produces byte-identical order / seen / fetched tables INCLUDING the
-payload bytes, and the "auto" estimator resolves both regimes from the
-corpus's parquet footers.
+payload bytes. The mode is derived from the corpus's parquet footers
+against ``payload_cache_max_bytes``, so each test forces a regime through
+that budget.
 """
 
 from __future__ import annotations
@@ -36,10 +37,15 @@ def world(spark, tmp_root):
     return d
 
 
-def _crawl(spark, tmp_root, world, tag: str, cfg: spec.CrawlConfig):
-    store = SnapshotStore(f"{tmp_root}/state-paywrite-{tag}")
+# a budget of 1 byte never fits a wave's payload; 1 TiB always does
+BUDGET = {"cache": 1 << 40, "rejoin": 1}
+
+
+def _crawl(spark, tmp_root, world, mode: str):
+    store = SnapshotStore(f"{tmp_root}/state-paywrite-{mode}")
+    cfg = dataclasses.replace(BASE, payload_cache_max_bytes=BUDGET[mode])
     eng = CrawlEngine(spark, store, world, cfg)
-    assert eng.payload_write_mode == cfg.payload_write  # explicit modes stick
+    assert eng.payload_write_mode == mode
     eng.run()
     order = [
         (r.epoch, r.wave_pos, r.url_norm, r.url_hash)
@@ -57,14 +63,8 @@ def _crawl(spark, tmp_root, world, tag: str, cfg: spec.CrawlConfig):
 
 
 def test_cache_and_rejoin_modes_identical(spark, tmp_root, world):
-    ca = _crawl(
-        spark, tmp_root, world, "cache",
-        dataclasses.replace(BASE, payload_write="cache"),
-    )
-    rj = _crawl(
-        spark, tmp_root, world, "rejoin",
-        dataclasses.replace(BASE, payload_write="rejoin"),
-    )
+    ca = _crawl(spark, tmp_root, world, "cache")
+    rj = _crawl(spark, tmp_root, world, "rejoin")
     assert ca[0] == rj[0] and len(ca[0]) > 0   # crawl order
     assert ca[1] == rj[1]                      # seen set
     assert ca[2] == rj[2] and len(ca[2]) > 0   # fetched rows incl. payloads

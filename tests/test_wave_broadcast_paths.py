@@ -2,8 +2,8 @@
 
 The epoch pipeline's wave-bounded join sides (next-frontier anti-join,
 fetch hit/miss split, scan-cache probe, change-detection history prune)
-broadcast only below ``cfg.wave_broadcast_max``; a 10^8-row wave at full
-scale takes the shuffle-join path instead (operators/hints.wave_side).
+broadcast only up to ``hints.WAVE_BROADCAST_MAX_ROWS``; a 10^8-row wave at
+full scale takes the shuffle-join path instead (operators/hints.wave_side).
 This pins that the switch is PLAN-ONLY: the same world crawled with the
 threshold at its default (everything broadcasts) and forced to 0 (nothing
 broadcasts) produces byte-identical order / seen / fetched / tls tables.
@@ -11,12 +11,11 @@ broadcasts) produces byte-identical order / seen / fetched / tls tables.
 
 from __future__ import annotations
 
-import dataclasses
-
 import pytest
 
 from monocator_spark import spec
 from monocator_spark.datagen import corpus as dg
+from monocator_spark.operators import hints
 from monocator_spark.plans.epoch import CrawlEngine
 from monocator_spark.sources.store import SnapshotStore
 
@@ -33,9 +32,9 @@ def world(spark, tmp_root):
     return d
 
 
-def _crawl(spark, tmp_root, world, tag: str, cfg: spec.CrawlConfig):
+def _crawl(spark, tmp_root, world, tag: str):
     store = SnapshotStore(f"{tmp_root}/state-wavebc-{tag}")
-    eng = CrawlEngine(spark, store, world, cfg)
+    eng = CrawlEngine(spark, store, world, BASE)
     eng.run()
     order = [
         (r.epoch, r.wave_pos, r.url_norm, r.url_hash)
@@ -53,13 +52,11 @@ def _crawl(spark, tmp_root, world, tag: str, cfg: spec.CrawlConfig):
     return order, seen, fetched, tls
 
 
-def test_broadcast_and_shuffle_paths_identical(spark, tmp_root, world):
-    bc = _crawl(spark, tmp_root, world, "bc", BASE)
-    # wave_broadcast_max=0: every wave-side join falls back to shuffle
-    sh = _crawl(
-        spark, tmp_root, world, "sh",
-        dataclasses.replace(BASE, wave_broadcast_max=0),
-    )
+def test_broadcast_and_shuffle_paths_identical(spark, tmp_root, world, monkeypatch):
+    bc = _crawl(spark, tmp_root, world, "bc")
+    # a 0-row ceiling: every wave-side join falls back to shuffle
+    monkeypatch.setattr(hints, "WAVE_BROADCAST_MAX_ROWS", 0)
+    sh = _crawl(spark, tmp_root, world, "sh")
     assert bc[0] == sh[0] and len(bc[0]) > 0   # crawl order
     assert bc[1] == sh[1]                      # seen set
     assert bc[2] == sh[2] and len(bc[2]) > 0   # fetched rows
