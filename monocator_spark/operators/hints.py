@@ -1,9 +1,11 @@
 """Join-side hints shared by the epoch pipeline's wave-bounded joins.
 
 Several epoch joins build their hash side from a WAVE-BOUNDED key set
-(≤ cfg.wave_size rows): the next-frontier anti-join (plans/epoch.py), the
-fetch hit/miss split (operators/fetch.py), and the change-detection history
-prune (operators/change.py). At bench scale those sides are a few MB of
+(≤ cfg.wave_size rows): the next-frontier anti-join and the "rejoin"-mode
+payload re-join (``_payload_rows``) in plans/epoch.py, the fetch hit/miss
+split (operators/fetch.py), the scan-cache probe (operators/scan.py
+``scan_rows``), and the change-detection history prune and prior join
+(operators/change.py). At bench scale those sides are a few MB of
 longs and a driver broadcast is the right plan; at 10^10-frontier scale an
 epoch wave is 10^8–10^9 keys — past Spark's 8 GB broadcast ceiling and the
 driver's memory — so the broadcast must be conditional, mirroring the

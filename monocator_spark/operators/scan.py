@@ -1,40 +1,58 @@
-"""Scan module — O8 DNS resolve, O12 TLS fan-out, O13 IP-level scan cache.
+"""Scan modules — TLS, DNS and SMTP probes behind one cache rule.
 
-Reference semantics reproduced (SURVEY.md §2.1):
-  * O8  — hostname → IP before any scan (`dns.enabled/prefixes/rrtypes`,
-    /root/reference/src/TODO.MD:57-59). No network exists in the sandbox, so
-    the resolve is the deterministic hash-derived mapping pinned in
-    ``spec.ip_of_host`` [canon]; the IP space is smaller than the host space
-    so co-hosted hosts genuinely share IPs.
-  * O12 — per-host TLS scan fans out over the enabled protocol versions and
-    re-aggregates into the reference's central result type
+The reference's VisitRequest carries optional per-visit modules, each
+behind its own ``enabled`` flag (reference ``src/TODO.MD:57-59,69-76``),
+and scans are cached by key (``fullScanCache.find(ip)``, TODO.MD:41). The
+engine runs every module through ONE cache rule, ``scan_rows``:
+
+  * take the wave's distinct keys;
+  * anti-join them against the module's persistent cache table and probe
+    only the never-seen keys;
+  * every wave host then equi-joins (cache ∪ fresh probes), so two hosts
+    on one key share a single probe; ``cache_hit`` = "key was cached
+    before this epoch" (order-free).
+
+The modules differ only in data — one row each in ``SCAN_MODULES``: the
+``CrawlConfig`` flag, the cache key, the probe function, the cache and
+output tables and the output columns.
+
+  * TLS (O12) — keyed by ``ip``. Fans out over the enabled protocol
+    versions and re-aggregates into the reference's central result type
     ``Map<TlsProtocolVersion, SingleVersionScan>`` + ``connectOK``
-    (/root/reference/src/TODO.MD:27-28, toggles TODO.MD:70-75): here
-    ``explode`` → per-(ip, version) outcome → ``map_from_entries(
-    sort_array(collect_list(struct(...))))`` + ``bool_or``.
-  * O13 — scans are cached per IP (`fullScanCache.find(ip)`,
-    /root/reference/src/TODO.MD:41): an anti-join against the persistent
-    ``scan_cache`` table picks only never-scanned IPs for the fan-out; every
-    wave host then equi-joins the (cache ∪ fresh) results, so two hosts on
-    one IP share a single scan.
+    (TODO.MD:27-28, toggles TODO.MD:70-75): ``explode`` → per-(ip,
+    version) outcome → ``map_from_entries(sort_array(collect_list(
+    struct(...))))`` + ``bool_or``, plus the certificate chain.
+  * DNS (O8) — keyed by ``host``. Resolves each configured (prefix,
+    rrtype) pair (``dns.prefixes`` / ``dns.rrtypes``, TODO.MD:58-59).
+  * SMTP — keyed by ``ip``. A banner grab (``smtp.enabled``, TODO.MD:76).
+
+The host → IP resolve every module shares is the deterministic
+hash-derived mapping pinned in ``spec.ip_of_host`` [canon] (the engine
+makes no network calls); the IP space is smaller than the host space, so
+co-hosted hosts genuinely share IPs.
 
 Everything is pure Catalyst — no UDFs: xxhash64/pmod reproduce the shared
 spec functions bit-for-bit (the pure-Python simulator recomputes them via
-``spec.tls_versions_of_ip`` / ``spec.tls_scan_of``).
+``spec.tls_versions_of_ip`` / ``spec.tls_scan_of`` / ``spec.dns_records_of``
+/ ``spec.smtp_probe_of``).
 
-Scale shape: the fan-out side is bounded by |distinct wave IPs| ≤ wave_size;
-the scan_cache table is O(IPs seen) and is touched only by (a) one anti-join
-probed by the bounded wave side and (b) one equi-join built from the bounded
-side — the cache is never shuffled wholesale. At 10^10-frontier scale the
-cache would be bucketed by ip (same layout as the corpus table) so both
-joins prune to the wave's buckets.
+Scale shape: the probe side is bounded by |distinct wave keys| ≤
+wave_size; a cache table is O(keys seen) and is touched only by (a) one
+anti-join probed by the bounded wave side and (b) one equi-join built from
+the bounded side (``hints.wave_side``) — a cache is never shuffled
+wholesale. At 10^10-frontier scale the caches would be bucketed by key
+(same layout as the corpus table) so both joins prune to the wave's
+buckets.
 """
 
 from __future__ import annotations
 
+from typing import Callable, NamedTuple
+
 from pyspark.sql import DataFrame, functions as F
 
 from monocator_spark import spec
+from monocator_spark.operators.hints import wave_side
 
 # columns of the persistent scan_cache table (state) and per-visit tls table
 CACHE_COLS = ["ip", "scan", "connect_ok", "n_versions", "certificates"]
@@ -174,51 +192,6 @@ def cert_chain_col(ip_col_name: str = "ip", ok_col: str = "connect_ok") -> F.Col
     )
 
 
-def scan_wave(
-    wave_hosts: DataFrame, cache: DataFrame | None, epoch: int,
-    cfg: spec.CrawlConfig | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """O13: (wave_hosts(host, ip), cache) → (tls_rows, new_cache_rows).
-
-    ``cache_hit`` is defined as "IP was in the cache before this epoch" —
-    order-free, so two co-hosted hosts discovered in the same wave both
-    count as misses but still share the single fresh scan.
-
-    The wave-IP probe side broadcasts only up to WAVE_BROADCAST_MAX_ROWS
-    (operators/hints.wave_side): a full-scale wave's distinct-IP set can be
-    10^7–10^8 rows, which must take the shuffle join against the cache.
-    """
-    from monocator_spark.operators.hints import wave_side
-
-    def _ws(df: DataFrame) -> DataFrame:
-        return wave_side(df, cfg) if cfg is not None else F.broadcast(df)
-
-    wave_ips = wave_hosts.select("ip").distinct()
-    if cache is None:
-        new_ips = wave_ips
-        cached_part = None
-    else:
-        new_ips = wave_ips.join(cache.select("ip"), "ip", "left_anti")
-        cached_part = cache.join(_ws(wave_ips), "ip", "inner").select(
-            "ip", "scan", "connect_ok", "certificates",
-            F.lit(True).alias("cache_hit"),
-        )
-    fresh = tls_scan_ips(new_ips)
-    fresh_part = fresh.select(
-        "ip", "scan", "connect_ok", "certificates",
-        F.lit(False).alias("cache_hit"),
-    )
-    all_scans = (
-        fresh_part if cached_part is None else cached_part.unionByName(fresh_part)
-    )
-    tls_rows = (
-        wave_hosts.join(all_scans, "ip", "inner")
-        .withColumn("epoch", F.lit(epoch))
-        .select(*TLS_COLS)
-    )
-    return tls_rows, fresh
-
-
 # -- O8 completion: DNS prefixes/rrtypes fan-out --------------------------------
 
 
@@ -290,40 +263,6 @@ def dns_resolve_records(hosts: DataFrame) -> DataFrame:
     )
 
 
-def dns_wave(
-    wave_hosts: DataFrame, cache: DataFrame | None, epoch: int,
-    cfg: spec.CrawlConfig | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """(wave_hosts(host), dns_cache) → (dns_rows, new_cache_rows).
-
-    Same cache discipline as the TLS scan (O13), keyed by HOST: record sets
-    resolve once per host lifetime; every wave host joins (cache ∪ fresh).
-    """
-    from monocator_spark.operators.hints import wave_side
-
-    def _ws(df: DataFrame) -> DataFrame:
-        return wave_side(df, cfg) if cfg is not None else F.broadcast(df)
-
-    hosts = wave_hosts.select("host").distinct()
-    if cache is None:
-        new_hosts = hosts
-        cached_part = None
-    else:
-        new_hosts = hosts.join(cache.select("host"), "host", "left_anti")
-        cached_part = cache.join(_ws(hosts), "host", "inner").select(
-            "host", "records", "n_records", F.lit(True).alias("cache_hit")
-        )
-    fresh = dns_resolve_records(new_hosts)
-    fresh_part = fresh.select(
-        "host", "records", "n_records", F.lit(False).alias("cache_hit")
-    )
-    all_recs = (
-        fresh_part if cached_part is None else cached_part.unionByName(fresh_part)
-    )
-    dns_rows = all_recs.withColumn("epoch", F.lit(epoch)).select(*DNS_COLS)
-    return dns_rows, fresh
-
-
 # -- SMTP module (the last VisitRequest module) ----------------------------------
 
 
@@ -352,39 +291,52 @@ def smtp_probe_ips(ips: DataFrame) -> DataFrame:
     )
 
 
-def smtp_wave(
-    wave_hosts: DataFrame, cache: DataFrame | None, epoch: int,
-    cfg: spec.CrawlConfig | None = None,
+# -- the one cache rule, and the table of modules that use it --------------------
+
+
+class ScanModule(NamedTuple):
+    flag: str  # CrawlConfig field that enables the module
+    key: str  # cache key column: "ip" or "host"
+    probe: Callable[[DataFrame], DataFrame]  # keys(key) → cache rows
+    cache_table: str  # state: every key probed so far
+    out_table: str  # per-visit rows
+    out_cols: list[str]
+
+
+SCAN_MODULES = (
+    ScanModule("tls_scan", "ip", tls_scan_ips, "scan_cache", "tls", TLS_COLS),
+    ScanModule("dns_scan", "host", dns_resolve_records, "dns_cache", "dns", DNS_COLS),
+    ScanModule("smtp_scan", "ip", smtp_probe_ips, "smtp_cache", "smtp", SMTP_COLS),
+)
+
+
+def scan_rows(
+    module: ScanModule, wave_hosts: DataFrame, cache: DataFrame | None,
+    epoch: int, cfg: spec.CrawlConfig,
 ) -> tuple[DataFrame, DataFrame]:
-    """(wave_hosts(host, ip), smtp_cache) → (smtp_rows, new_cache_rows).
+    """(wave_hosts(host, ip), cache) → (out rows, fresh cache rows).
 
-    IP-keyed cache exactly like the TLS scan (O13): co-hosted hosts share
-    one SMTP probe; ``cache_hit`` = IP cached before this epoch.
+    Only keys absent from ``cache`` are probed; every wave host joins
+    (cache ∪ fresh). ``cache_hit`` = "key was cached before this epoch" —
+    order-free, so two co-hosted hosts new in the same wave both count as
+    misses but still share the single fresh probe. The wave-key side of the cache join broadcasts only up
+    to WAVE_BROADCAST_MAX_ROWS (operators/hints.wave_side): a full-scale
+    wave's distinct-key set can be 10^7–10^8 rows, which must take the
+    shuffle join against the cache.
     """
-    from monocator_spark.operators.hints import wave_side
-
-    def _ws(df: DataFrame) -> DataFrame:
-        return wave_side(df, cfg) if cfg is not None else F.broadcast(df)
-
-    wave_ips = wave_hosts.select("ip").distinct()
+    key = module.key
+    keys = wave_hosts.select(key).distinct()
     if cache is None:
-        new_ips = wave_ips
-        cached_part = None
+        fresh = module.probe(keys)
     else:
-        new_ips = wave_ips.join(cache.select("ip"), "ip", "left_anti")
-        cached_part = cache.join(_ws(wave_ips), "ip", "inner").select(
-            "ip", "port", "connect_ok", "banner", F.lit(True).alias("cache_hit")
-        )
-    fresh = smtp_probe_ips(new_ips)
-    fresh_part = fresh.select(
-        "ip", "port", "connect_ok", "banner", F.lit(False).alias("cache_hit")
-    )
-    all_probes = (
-        fresh_part if cached_part is None else cached_part.unionByName(fresh_part)
-    )
-    smtp_rows = (
-        wave_hosts.join(all_probes, "ip", "inner")
+        fresh = module.probe(keys.join(cache.select(key), key, "left_anti"))
+    results = fresh.withColumn("cache_hit", F.lit(False))
+    if cache is not None:
+        cached = cache.join(wave_side(keys, cfg), key, "inner").select(*fresh.columns)
+        results = cached.withColumn("cache_hit", F.lit(True)).unionByName(results)
+    rows = (
+        wave_hosts.join(results, key, "inner")
         .withColumn("epoch", F.lit(epoch))
-        .select(*SMTP_COLS)
+        .select(*module.out_cols)
     )
-    return smtp_rows, fresh
+    return rows, fresh

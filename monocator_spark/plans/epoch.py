@@ -21,6 +21,7 @@ from __future__ import annotations
 import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (
@@ -28,7 +29,9 @@ from pyspark.sql.types import (
 )
 
 from monocator_spark import spec
-from monocator_spark.operators import dedup, enqueue, fetch, outlinks, politeness
+from monocator_spark.operators import (
+    dedup, enqueue, fetch, outlinks, politeness, scan,
+)
 from monocator_spark.operators.enqueue import FRONTIER_COLS_Q
 from monocator_spark.sim.simulator import MISSING, OK
 from monocator_spark.sources.store import SnapshotStore
@@ -173,14 +176,16 @@ class CrawlEngine:
     # -- one epoch, two pipelined phases ----------------------------------------
     #
     # _phase1 = the epoch's heavy COMPUTE: wave selection, fetch+validate
-    #   (payload bytes flow corpus-scan → validate UDF → dropped; only the
-    #   NARROW validate output is cached), outlink dedup+gate,
-    #   next-frontier — everything materialized into caches by one action,
-    #   zero table writes.
+    #   (the validate output is cached; it keeps the payload bytes only in
+    #   "cache" payload_write_mode), outlink dedup+gate, next-frontier —
+    #   everything materialized into caches by one action, zero table
+    #   writes.
     # _phase2 = the epoch's FLUSH: all table writes from those caches
-    #   (concurrent jobs) — including the bytes-bearing ``fetched`` table,
-    #   rebuilt by a corpus re-join (_payload_rows) so the byte stream
-    #   never sits in a cache tier — then the atomic manifest commit.
+    #   (concurrent jobs) — including the bytes-bearing ``fetched`` table
+    #   (_payload_rows): written straight from the validate cache in
+    #   "cache" mode, rebuilt by a corpus re-join in "rejoin" mode so the
+    #   byte stream never sits in a cache tier (the mode comes from
+    #   payload_write_mode) — then the atomic manifest commit.
     #
     # run() overlaps _phase2(k) with _phase1(k+1): _phase2 stages the
     # STATE tables (frontier / seen / bloom, scan caches) first and
@@ -274,42 +279,24 @@ class CrawlEngine:
                 else newn
             )
 
-        # scan modules (O8 DNS resolve/fan-out → O13 IP-cache split → O12
-        # TLS fan-out → SMTP banner grab) — each behind its VisitRequest
-        # flag; all share one resolved wave-host set per epoch
-        tls_rows = new_scan_rows = None
-        dns_rows = new_dns_rows = None
-        smtp_rows = new_smtp_rows = None
-        if cfg.tls_scan or cfg.dns_scan or cfg.smtp_scan:
-            from monocator_spark.operators import scan as scanop
-
-            wave_hosts = scanop.resolve_hosts(
+        # scan modules (TLS, DNS, SMTP) — each behind its VisitRequest flag;
+        # all share one resolved wave-host set per epoch
+        modules = [m for m in scan.SCAN_MODULES if getattr(cfg, m.flag)]
+        if modules:
+            wave_hosts = scan.resolve_hosts(
                 wave.select("host").distinct(), cfg.n_hosts
             ).cache()
             persisted.append(wave_hosts)
-        if cfg.tls_scan:
-            scan_cache = self.store.preview(self.spark, "scan_cache")
-            tls_rows, new_scan_rows = scanop.scan_wave(
-                wave_hosts, scan_cache, epoch, cfg
+        scans = []
+        for m in modules:
+            rows, fresh = scan.scan_rows(
+                m, wave_hosts, self.store.preview(self.spark, m.cache_table),
+                epoch, cfg,
             )
-            # fresh scans feed BOTH the cache append and the tls rows —
-            # cache so the fan-out computes once
-            new_scan_rows = new_scan_rows.cache()
-            persisted.append(new_scan_rows)
-        if cfg.dns_scan:
-            dns_cache = self.store.preview(self.spark, "dns_cache")
-            dns_rows, new_dns_rows = scanop.dns_wave(
-                wave_hosts, dns_cache, epoch, cfg
-            )
-            new_dns_rows = new_dns_rows.cache()
-            persisted.append(new_dns_rows)
-        if cfg.smtp_scan:
-            smtp_cache = self.store.preview(self.spark, "smtp_cache")
-            smtp_rows, new_smtp_rows = scanop.smtp_wave(
-                wave_hosts, smtp_cache, epoch, cfg
-            )
-            new_smtp_rows = new_smtp_rows.cache()
-            persisted.append(new_smtp_rows)
+            # fresh probes feed BOTH the cache append and the output rows —
+            # cache so the probe computes once
+            persisted.append(fresh.cache())
+            scans.append((m, rows, fresh))
 
         t0 = time.monotonic()
         wave_cols = wave.select(*FRONTIER_COLS_Q, "wave_pos")
@@ -487,9 +474,7 @@ class CrawlEngine:
             "perm_failed": perm_failed, "new_entries": new_entries,
             "denied_new": denied_new, "lineage": lineage,
             "next_frontier": next_frontier, "bloom_next": bloom_next,
-            "tls_rows": tls_rows, "new_scan_rows": new_scan_rows,
-            "dns_rows": dns_rows, "new_dns_rows": new_dns_rows,
-            "smtp_rows": smtp_rows, "new_smtp_rows": new_smtp_rows,
+            "scans": scans,
             "host_next": host_next_new,
             "status_obs": status_obs, "frontier_obs": frontier_obs,
             "persisted": persisted,
@@ -535,8 +520,9 @@ class CrawlEngine:
 
         The STATE tables (frontier, seen, bloom, the scan caches) are
         staged first and ``state_ready`` is signalled so epoch k+1's
-        compute can start; the heavy payload flush (the corpus re-join
-        writing ``fetched``, see _payload_rows), the narrow flushes and the
+        compute can start; the heavy payload flush (``fetched``, written
+        from the validate cache or by a corpus re-join according to
+        payload_write_mode, see _payload_rows), the narrow flushes and the
         commit overlap it. Under change detection the lag-based
         prior_phash lookup consumes per-epoch history as STATE — that
         history is the NARROW ``phash_hist`` table (a projection of the
@@ -573,13 +559,9 @@ class CrawlEngine:
                 "seen", new_entries.select("url_hash", "url_norm"), epoch + 1
             )
             st.stage_overwrite("bloom", ctx["bloom_next"], epoch + 1)
-        if cfg.tls_scan:
-            # scan_cache is STATE: next epoch's anti-join must see it
-            st.stage_append("scan_cache", ctx["new_scan_rows"], epoch + 1)
-        if cfg.dns_scan:
-            st.stage_append("dns_cache", ctx["new_dns_rows"], epoch + 1)
-        if cfg.smtp_scan:
-            st.stage_append("smtp_cache", ctx["new_smtp_rows"], epoch + 1)
+        for m, _rows, fresh in ctx["scans"]:
+            # scan caches are STATE: next epoch's anti-join must see them
+            st.stage_append(m.cache_table, fresh, epoch + 1)
         if cfg.time_politeness and ctx["host_next"] is not None:
             # host_next is STATE: next epoch's range gate reads it
             st.stage_overwrite("host_next", ctx["host_next"], epoch + 1)
@@ -609,18 +591,10 @@ class CrawlEngine:
             lambda: st.stage_append("failed", perm_failed, epoch + 1),
             flush_fetched,
         ]
-        if cfg.tls_scan:
-            flushes.append(
-                lambda: st.stage_append("tls", ctx["tls_rows"], epoch + 1)
-            )
-        if cfg.dns_scan:
-            flushes.append(
-                lambda: st.stage_append("dns", ctx["dns_rows"], epoch + 1)
-            )
-        if cfg.smtp_scan:
-            flushes.append(
-                lambda: st.stage_append("smtp", ctx["smtp_rows"], epoch + 1)
-            )
+        flushes += [
+            partial(st.stage_append, m.out_table, rows, epoch + 1)
+            for m, rows, _fresh in ctx["scans"]
+        ]
         if cfg.follow_outlinks:
             flushes.append(
                 lambda: st.stage_append(

@@ -41,6 +41,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
@@ -60,13 +61,7 @@ _INDEX_SCHEMA = "band bigint, h0 bigint, h1 bigint, rep_id bigint"
 
 
 class StreamingCorpusDedup:
-    """Continuous corpus dedup: feed dir → verdicts dir + growing index.
-
-    ``load_index`` lists the ``index_dir/batch_id=N`` partitions with a
-    driver-side ``glob``, so ``index_dir`` must be on the driver's local
-    filesystem (not HDFS/S3), unlike the feed, verdict and checkpoint
-    paths, which go through Spark readers and writers.
-    """
+    """Continuous corpus dedup: feed dir → verdicts dir + growing index."""
 
     def __init__(
         self,
@@ -83,16 +78,6 @@ class StreamingCorpusDedup:
         self.checkpoint_dir = checkpoint_dir
 
     # -- state -----------------------------------------------------------
-    def _index_dirs(self, before: int | None = None) -> list[str]:
-        import glob
-
-        dirs = []
-        for d in glob.glob(f"{self.index_dir}/batch_id=*"):
-            bid = int(d.rsplit("=", 1)[1])
-            if before is None or bid < before:
-                dirs.append(d)
-        return sorted(dirs)
-
     def load_index(self, before: int | None = None) -> DataFrame:
         """The band index accumulated so far (empty on first start).
 
@@ -100,13 +85,22 @@ class StreamingCorpusDedup:
         dedup against exactly the state that preceded it — reading its own
         (partially or fully written) index dir back would turn every one of
         its docs into a self-duplicate and break replay determinism. The
-        O(batches) directory listing is driver-side bookkeeping; a
-        deployment compacts old batch dirs the way the crawl store
-        compacts epochs."""
-        dirs = self._index_dirs(before)
-        if not dirs:
+        index is read through Spark's partition discovery on ``index_dir``,
+        so any filesystem Spark writes to works, and ``before`` prunes
+        ``batch_id`` partitions; a deployment compacts old batch dirs the
+        way the crawl store compacts epochs."""
+        try:
+            index = self.spark.read.schema(
+                f"{_INDEX_SCHEMA}, batch_id int"
+            ).parquet(self.index_dir)
+        except AnalysisException as e:
+            if e.getCondition() != "PATH_NOT_FOUND":
+                raise
+            # no batch has written the index yet
             return self.spark.createDataFrame([], _INDEX_SCHEMA)
-        return self.spark.read.schema(_INDEX_SCHEMA).parquet(*dirs)
+        if before is not None:
+            index = index.where(F.col("batch_id") < before)
+        return index.drop("batch_id")
 
     # -- one micro-batch -------------------------------------------------
     def _process_batch(self, batch: DataFrame, batch_id: int) -> None:

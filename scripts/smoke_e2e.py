@@ -56,7 +56,6 @@ try:
 
     got_seen = {(r.url_hash, r.url_norm) for r in eng.seen_df().collect()}
     exp_seen = set(sres.seen.items())
-    exp_seen = {(h, u) for h, u in sres.seen.items()}
     if got_seen == exp_seen:
         print("SEEN MATCH ✓", len(got_seen))
     else:
@@ -67,7 +66,11 @@ try:
 
     got_f = {(r.url_hash, r.image_id, r.caption, r.phash) for r in eng.fetched_df().collect()}
     exp_f = {(d["url_hash"], d["image_id"], d["caption"], d["phash"]) for d in sres.fetched}
-    print("FETCHED MATCH ✓" if got_f == exp_f else f"FETCHED MISMATCH {len(got_f)} vs {len(exp_f)}")
+    if got_f == exp_f:
+        print("FETCHED MATCH ✓", len(got_f))
+    else:
+        print("FETCHED MISMATCH", len(got_f), "vs", len(exp_f))
+        sys.exit(1)
 finally:
     shutil.rmtree(tmp, ignore_errors=True)
     spark.stop()

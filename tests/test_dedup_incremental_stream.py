@@ -112,3 +112,30 @@ def test_streaming_matches_sequential_batch_twin(spark, tmp_root):
         for r in sd.verdicts().collect()
     }
     assert got2 == got
+
+
+def test_file_uri_index_dir_keeps_cross_batch_state(spark, tmp_root):
+    """The index is found again when ``index_dir`` is a URI, not a plain
+    path: batch 2 must still see batch 1's kept doc 1."""
+    from monocator_spark.streaming.dedup_incremental_stream import (
+        StreamingCorpusDedup,
+    )
+
+    base = f"{tmp_root}/incdedup-uri"
+    sd = StreamingCorpusDedup(
+        spark,
+        feed_dir=f"{base}/feed",
+        index_dir=f"file://{base}/index",
+        verdicts_dir=f"{base}/verdicts",
+        checkpoint_dir=f"{base}/ckpt",
+    )
+    _write_feed(spark, sd.feed_dir, BATCH1, "b1")
+    sd.run_available()
+    _write_feed(spark, sd.feed_dir, BATCH2, "b2")
+    sd.run_available()
+
+    got = {
+        r["doc_id"]: (r["verdict"], r["rep_id"])
+        for r in sd.verdicts().collect()
+    }
+    assert got[10] == ("dup_existing", 1)

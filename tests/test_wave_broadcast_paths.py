@@ -6,7 +6,8 @@ broadcast only up to ``hints.WAVE_BROADCAST_MAX_ROWS``; a 10^8-row wave at
 full scale takes the shuffle-join path instead (operators/hints.wave_side).
 This pins that the switch is PLAN-ONLY: the same world crawled with the
 threshold at its default (everything broadcasts) and forced to 0 (nothing
-broadcasts) produces byte-identical order / seen / fetched / tls tables.
+broadcasts) produces byte-identical order / seen / fetched tables and
+TLS / DNS / SMTP rows (all three modules share the one scan-cache probe).
 """
 
 from __future__ import annotations
@@ -21,7 +22,8 @@ from monocator_spark.sources.store import SnapshotStore
 
 N_IMAGES, N_HOSTS, N_SEEDS = 150, 8, 25
 BASE = spec.CrawlConfig(
-    n_images=N_IMAGES, n_hosts=N_HOSTS, wave_size=30, tls_scan=True,
+    n_images=N_IMAGES, n_hosts=N_HOSTS, wave_size=30,
+    tls_scan=True, dns_scan=True, smtp_scan=True,
 )
 
 
@@ -49,7 +51,15 @@ def _crawl(spark, tmp_root, world, tag: str):
         (r.epoch, r.host, r.ip, r.connect_ok, r.cache_hit)
         for r in eng.tls_df().collect()
     )
-    return order, seen, fetched, tls
+    dns = sorted(
+        (r.epoch, r.host, r.n_records, r.cache_hit)
+        for r in eng.dns_df().collect()
+    )
+    smtp = sorted(
+        (r.epoch, r.host, r.ip, r.connect_ok, r.cache_hit)
+        for r in eng.smtp_df().collect()
+    )
+    return order, seen, fetched, tls, dns, smtp
 
 
 def test_broadcast_and_shuffle_paths_identical(spark, tmp_root, world, monkeypatch):
@@ -61,3 +71,5 @@ def test_broadcast_and_shuffle_paths_identical(spark, tmp_root, world, monkeypat
     assert bc[1] == sh[1]                      # seen set
     assert bc[2] == sh[2] and len(bc[2]) > 0   # fetched rows
     assert bc[3] == sh[3] and len(bc[3]) > 0   # tls rows (scan-cache probe)
+    assert bc[4] == sh[4] and len(bc[4]) > 0   # dns rows
+    assert bc[5] == sh[5] and len(bc[5]) > 0   # smtp rows
